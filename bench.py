@@ -84,6 +84,8 @@ def main() -> None:
     max_attempts = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "3")))
 
     bench_pre_ceiling = _quick_ceiling()
+    # same-scale session warm-up (capped to bound the untimed setup)
+    os.environ.setdefault("SPARK_GRAFT_WARM_CONVS", str(min(100_000, n_convs)))
     spark = get_spark("bench", cores=cores)
     timings: dict[str, float] = {}
     extra: dict[str, float] = {}

@@ -300,12 +300,12 @@ def query_distinct(
     estimation) is decided correctly.
     """
     if family == "theta":
-        est = F.theta_sketch_estimate("sketch").cast("double")
+        est = "theta_sketch_estimate(sketch)"
         k = 2**cfg.theta_lg_k
         rse = 1.0 / math.sqrt(k - 1)
-        exact = est < F.lit(float(k))
+        exact_below = float(k)
     elif family in ("hll", "cpc"):
-        est = F.hll_sketch_estimate("sketch").cast("double")
+        est = "hll_sketch_estimate(sketch)"
         rse = 1.04 / math.sqrt(2**cfg.hll_lg_k)
         # HLL is exact while the sketch is still in coupon (LIST/SET)
         # mode; the reference then reports estimation_mode=false and
@@ -316,17 +316,22 @@ def query_distinct(
         # the boundary is never reported exact with collapsed bounds
         # (coverage property-tested across n in {k/8..4k} in
         # tests/test_sketches.py::test_hll_bounds_coverage_across_boundary).
-        exact = est < F.lit(float(2**cfg.hll_lg_k) / 8.0)
+        exact_below = float(2**cfg.hll_lg_k) / 8.0
     else:
         raise ValueError(f"{family!r} is not a distinct-counting family")
-    cols = [c for c in state.columns if c != "sketch"]
-    out = state.select(*cols, est.alias("estimate"), exact.alias("_exact"))
-    sel = [*cols, "estimate", (~F.col("_exact")).alias("estimation_mode")]
+    # one SQL select list, parsed in a single py4j call: the later items
+    # read the estimate through lateral column aliases, so the sketch is
+    # evaluated once
+    cols = ["`" + c.replace("`", "``") + "`" for c in state.columns if c != "sketch"]
+    sel = [
+        *cols,
+        f"CAST({est} AS DOUBLE) AS estimate",
+        f"NOT (estimate < {exact_below!r}D) AS estimation_mode",
+    ]
     for z in (1, 2, 3):
-        lo = F.when(F.col("_exact"), F.col("estimate")).otherwise(F.col("estimate") * (1 - z * rse))
-        hi = F.when(F.col("_exact"), F.col("estimate")).otherwise(F.col("estimate") * (1 + z * rse))
-        sel += [lo.alias(f"lb_{z}"), hi.alias(f"ub_{z}")]
-    return out.select(*sel)
+        for side, f in (("lb", 1 - z * rse), ("ub", 1 + z * rse)):
+            sel.append(f"IF(estimation_mode, estimate * {f!r}D, estimate) AS {side}_{z}")
+    return state.selectExpr(*sel)
 
 
 def query_quantiles(

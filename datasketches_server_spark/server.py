@@ -7,7 +7,14 @@ type?}, and ``set*`` keys fanning one spec over a ``names`` list; a bare
 JSON array of declarations is also accepted (SketchServerConfig.java:
 91-93).  Running the reference's example configs through this class is
 the parity demonstration: same declarations, same update/query/merge/
-serialize/reset/status semantics, state in tables instead of a heap map.
+serialize/reset/status semantics.
+
+Where state lives (the reference's heap map, SketchStorage.java:49):
+every k-bounded family (theta, hll/cpc, kll, reservoir, varopt) is held
+in the driver JVM as a ``LocalRelation`` (see :func:`_driver_resident`),
+so query, serialize and queries of a loaded image schedule no Spark job;
+frequency keeps an exact, unbounded item table and stays a local
+checkpoint in executor memory.
 
 Batch-of-requests ≙ multi-row DataFrame (BaseSketchesQueryHandler.java:
 125-139 array fan-out).  Updates are mergeable appends; queries merge at
@@ -22,13 +29,17 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .config import SketchConfig
 from .functions import sketches as SK
 
 FAMILIES = {"theta", "hll", "cpc", "kll", "frequency", "reservoir", "varopt"}
 DISTINCT = {"theta", "hll", "cpc"}
-VALUE_TYPES = {"int": "int", "long": "long", "float": "float", "double": "double", "string": "string"}
+VALUE_TYPES = {
+    "int": T.IntegerType(), "long": T.LongType(), "float": T.FloatType(),
+    "double": T.DoubleType(), "string": T.StringType(),
+}
 BINARY_FAMILIES = {"theta", "hll", "cpc", "kll"}
 
 
@@ -86,7 +97,8 @@ class SketchTableServer:
     def __init__(self, spark: SparkSession, decls: list[SketchDecl]):
         self.spark = spark
         self.decls = {d.name: d for d in decls}
-        # binary sketch state: name -> one-row DF (sketch BINARY)
+        # name -> state DF: a driver-resident LocalRelation for every
+        # k-bounded family, a local checkpoint for frequency
         self._state: dict[str, DataFrame] = {}
         # per-name update counter: gives sampling-family rows a stable
         # cross-batch identity so occurrence sampling is deterministic
@@ -106,8 +118,11 @@ class SketchTableServer:
         if d is None:
             raise KeyError(name)  # 422 analog
         cfg = self._cfg(d)
-        if d.value_type and d.family in DISTINCT:
-            values = values.withColumn(value_col, F.col(value_col).cast(VALUE_TYPES[d.value_type]))
+        if d.family in DISTINCT:
+            vtype = VALUE_TYPES[d.value_type]
+            # cast only when needed: each DataFrame op is a JVM analysis
+            if values.schema[value_col].dataType != vtype:
+                values = values.withColumn(value_col, F.col(value_col).cast(vtype))
         row_key = None
         if d.family in ("reservoir", "varopt"):
             # occurrence semantics across update calls (UpdateHandler.java:
@@ -127,16 +142,24 @@ class SketchTableServer:
             values, [], value_col, d.family, cfg, weight_col=weight_col, row_key_col=row_key
         )
         prev = self._state.get(name)
-        if prev is None:
-            self._state[name] = batch
-        else:
+        if prev is not None:
             # every family merges across update calls (the reference
             # accumulates: UpdateHandler.java:72-94); sample states carry
             # their keys so bottom-k re-merge is exact
-            self._state[name] = SK.sketch_merge(
+            batch = SK.sketch_merge(
                 prev.unionByName(batch), d.family if d.family != "cpc" else "hll", (), cfg
             )
-        self._state[name] = self._state[name].localCheckpoint()
+        self._store(d, batch)
+
+    def _store(self, d: SketchDecl, state: DataFrame) -> DataFrame:
+        """Materialize and keep a sketch's new state: the only place the
+        endpoints run the state's plan."""
+        if d.family == "frequency":
+            held = state.localCheckpoint()  # exact item table: unbounded
+        else:
+            held = _driver_resident(state)
+        self._state[d.name] = held
+        return held
 
     # -- /query -------------------------------------------------------------
     def query(self, name: str, **kwargs) -> DataFrame:
@@ -157,8 +180,9 @@ class SketchTableServer:
     # -- /merge -------------------------------------------------------------
     def merge(self, target: str | None, sources: list[str], k: int | None = None) -> DataFrame:
         """Union named sketches; family compatibility enforced
-        (MergeHandler.java:156-158, 183-188).  With a target the result
-        replaces the target's state; without, it is returned (the
+        (MergeHandler.java:156-158, 183-188).  With a target the merge
+        runs under the target's declaration (its k) and the stored target
+        state is returned; without, the merge plan is returned (the
         base64-export path, MergeHandler.java:92-100)."""
         fams = {self.decls[s].family for s in sources} | ({self.decls[target].family} if target else set())
         if len(fams) > 1:
@@ -167,15 +191,11 @@ class SketchTableServer:
         parts = [self._state[s] for s in dict.fromkeys(sources + ([target] if target else [])) if s in self._state]
         if not parts:
             raise ValueError("merge: no listed source has any data")  # 422 analog
+        decl = self.decls[target or sources[0]]
         merged = SK.sketch_merge(
-            _union_all(parts),
-            fam if fam != "cpc" else "hll",
-            (),
-            self._cfg(self.decls[sources[0]]),
+            _union_all(parts), fam if fam != "cpc" else "hll", (), self._cfg(decl)
         )
-        if target:
-            self._state[target] = merged.localCheckpoint()
-        return merged
+        return self._store(decl, merged) if target else merged
 
     # -- /serialize ---------------------------------------------------------
     def serialize(self, name: str, max_items: int = 65536) -> str:
@@ -238,13 +258,12 @@ class SketchTableServer:
         cfg = self._cfg(d)
         prev = self._state.get(name)
         if d.family in BINARY_FAMILIES:
-            df = self.spark.createDataFrame([(image,)], "image string")
-            sk = SK.deserialize_sketch(df).select("sketch")
+            sk = SK.deserialize_sketch(_image_row(self.spark, image)).select("sketch")
             merged = sk if prev is None else SK.sketch_merge(
                 prev.select("sketch").unionByName(sk),
                 d.family if d.family != "cpc" else "hll", (), cfg,
             )
-            self._state[name] = merged.localCheckpoint()
+            self._store(d, merged)
             return
         p = json.loads(base64.urlsafe_b64decode(image))
         if p["family"] != d.family:
@@ -296,7 +315,7 @@ class SketchTableServer:
         merged = batch if prev is None else SK.sketch_merge(
             prev.unionByName(batch), d.family, (), cfg
         )
-        self._state[name] = merged.localCheckpoint()
+        self._store(d, merged)
 
     # -- /reset, /status ----------------------------------------------------
     def reset(self, name: str) -> None:
@@ -310,6 +329,31 @@ class SketchTableServer:
         return self.spark.createDataFrame(
             rows, "name string, family string, type string, k int, has_data boolean"
         ).orderBy("name")
+
+
+def _local_relation(spark: SparkSession, jrows, jschema) -> DataFrame:
+    """A DataFrame over JVM-side rows (a ``java.util.List<Row>``) as a
+    ``LocalRelation``: built with one py4j call, no Python RDD or Arrow
+    transfer.  Spark folds projections of a LocalRelation while planning
+    and collects a local scan without scheduling a job."""
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
+
+
+def _driver_resident(state: DataFrame) -> DataFrame:
+    """Hold a k-bounded sketch state in the driver JVM: its plan runs
+    once and the rows it yields are collected there, never into Python."""
+    jdf = state._jdf
+    return _local_relation(state.sparkSession, jdf.collectAsList(), jdf.schema())
+
+
+def _image_row(spark: SparkSession, image: str) -> DataFrame:
+    """The one-row ``image string`` frame of a base64 image, built in
+    the driver JVM."""
+    jvm = spark._jvm
+    cell = spark.sparkContext._gateway.new_array(jvm.java.lang.Object, 1)
+    cell[0] = image
+    row = jvm.org.apache.spark.sql.RowFactory.create(cell)
+    return _local_relation(spark, [row], jvm.org.apache.spark.sql.types.StructType.fromDDL("image string"))
 
 
 def _sample_item_type(state: DataFrame) -> str:

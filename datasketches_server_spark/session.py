@@ -87,6 +87,11 @@ def get_spark(
         # (measured 6x CPU inflation at batch=10000 with 16 workers)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.ui.enabled", "false")
+        # no Python call-site capture per Column/DataFrame call: it is
+        # what makes plan building cost milliseconds per call (F.col:
+        # 2.2 ms with it, 0.5 ms without), and the serving path builds
+        # a plan per request.  Analysis errors lose their Python origin.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # generated-class cache: the 100-entry default evicts the heavy
         # queries' compiled classes while a many-query session (the
         # bench, the oracle sweep) churns hundreds of codegen shapes;
@@ -150,32 +155,15 @@ def _warm_session(spark: SparkSession) -> None:
 
         # Warm SCALE: codegen classes are shaped by AQE's size-driven
         # decisions, so a 300-conv warm pass compiles broadcast-shaped
-        # classes while the benchmark corpus executes shuffled-hash
-        # shapes -- compilation-counter measured: after a same-scale
-        # warm pass (different seed, nothing reused) the first bench
-        # invocation compiles 0 new classes and runs 5.9 s vs 45
-        # classes / 9.7-12.6 s after a miniature-only warm.  Benchmark
-        # sessions (app name "bench", i.e. the frozen bench.py) therefore
-        # warm at the bench's own corpus size (capped at 100k convs to
-        # bound the untimed setup); every other session keeps the cheap
-        # miniature pass.  Override with SPARK_GRAFT_WARM_CONVS.
-        warm_n = os.environ.get("SPARK_GRAFT_WARM_CONVS")
-        if warm_n is not None:
-            warm_n = int(warm_n)
-        elif (spark.sparkContext.appName or "") == "bench":
-            sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-            try:
-                sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
-            except ValueError:
-                sf = 0.1
-            bench_n = int(
-                os.environ.get(
-                    "SPARK_GRAFT_BENCH_CONVS", str(max(2000, int(1_000_000 * sf)))
-                )
-            )
-            warm_n = min(100_000, bench_n)
-        else:
-            warm_n = 300
+        # classes while a large corpus executes shuffled-hash shapes --
+        # compilation-counter measured: after a same-scale warm pass
+        # (different seed, nothing reused) the first timed invocation
+        # compiles 0 new classes and runs 5.9 s vs 45 classes /
+        # 9.7-12.6 s after a miniature-only warm.  A caller that will
+        # run at a known corpus size opts in to a same-scale warm-up
+        # with SPARK_GRAFT_WARM_CONVS (bench.py sets it); every other
+        # session keeps the cheap miniature pass.
+        warm_n = int(os.environ.get("SPARK_GRAFT_WARM_CONVS", "300"))
         t = synth_transcripts(spark, n_convs=warm_n, seed=9)
         if warm_n >= 20_000:
             # the bench persists its corpus, so its operators read an

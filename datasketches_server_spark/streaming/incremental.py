@@ -452,6 +452,13 @@ def _base_watermark(m: DataFrame) -> int | None:
     return None if row["w"] is None else int(row["w"])
 
 
+def _has_base(spark: SparkSession, metrics_path: str) -> bool:
+    """Whether the base partition exists: a file-system lookup through
+    the session's Hadoop FileSystem, no Spark job."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(metrics_path, f"epoch_id={BASE_EPOCH}")
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path)
+
+
 def _cleanup_epochs(metrics_path: str, through_epoch: int) -> int:
     """Drop epoch partitions already folded into the base row.  Local-FS
     listing here; on a real warehouse this is the table format's
@@ -577,7 +584,8 @@ def merged_view(spark: SparkSession, metrics_path: str, key_col: str = "event_ty
     epoch partitions already folded into the base invisible even if a
     compaction crashed before removing them."""
     m = _read_metrics(spark, metrics_path)
-    watermark = _base_watermark(m)
+    # no base partition => no compaction ran: skip the watermark's job
+    watermark = _base_watermark(m) if _has_base(spark, metrics_path) else None
     if watermark is not None:
         m = m.where((F.col("epoch_id") == BASE_EPOCH) | (F.col("epoch_id") > watermark))
     m = m.dropDuplicates(["epoch_id", key_col])

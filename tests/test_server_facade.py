@@ -4,6 +4,8 @@ flavors: config parsing, type enforcement, estimate tolerance, merge)."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,6 +29,21 @@ REFERENCE_STYLE_CONFIG = {
         "names": ["theta0", "theta1"],
     },
 }
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs started while fn runs (counted through a job group)."""
+    sc = spark.sparkContext
+    group = f"facade-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_parse_config_forms():
@@ -93,6 +110,47 @@ def test_merge_and_family_compat(spark):
         srv.merge(None, ["theta0", "duration"])  # MergeHandler.java:183-188
 
 
+def test_merge_into_target_uses_target_k_and_returns_stored_state(spark):
+    """With a target, the merge runs under the TARGET's declaration (its
+    lg_k=5: 32 nominal entries, so 1000 distinct items leave exact mode)
+    and returns the stored state: collecting it re-runs nothing."""
+    srv = SketchTableServer(spark, parse_config([
+        {"name": "a", "family": "theta", "k": 12, "type": "long"},
+        {"name": "b", "family": "theta", "k": 12, "type": "long"},
+        {"name": "small", "family": "theta", "k": 5, "type": "long"},
+    ]))
+    srv.update("a", spark.range(0, 600).select(F.col("id").alias("value")))
+    srv.update("b", spark.range(400, 1000).select(F.col("id").alias("value")))
+    out = srv.merge("small", ["a", "b"])
+    assert _jobs_run(spark, out.collect) == 0
+    row = srv.query("small").collect()[0]
+    assert row["estimation_mode"]
+    assert row["estimate"] != 1000
+    assert row["estimate"] == pytest.approx(1000, rel=3 / (32 - 1) ** 0.5)
+
+
+def test_held_sketch_reads_run_no_spark_job(spark):
+    """theta, kll and reservoir state is held in the driver: query and
+    serialize answer without scheduling a Spark job."""
+    srv = SketchTableServer(spark, parse_config([
+        {"name": "t", "family": "theta", "k": 12, "type": "long"},
+        {"name": "q", "family": "kll", "k": 200},
+        {"name": "r", "family": "reservoir", "k": 8},
+    ]))
+    nums = spark.range(500).select(F.col("id").alias("value"))
+    for n in ("t", "q", "r"):
+        srv.update(n, nums)
+        srv.update(n, nums)
+        assert _jobs_run(spark, lambda: srv.query(n).collect()) == 0, n
+        assert _jobs_run(spark, lambda: srv.serialize(n)) == 0, n
+    # a loaded image into an empty sketch is held the same way
+    img = srv.serialize("t")
+    srv.reset("t")
+    assert _jobs_run(spark, lambda: srv.load_image("t", img)) == 0
+    assert _jobs_run(spark, lambda: srv.query("t").collect()) == 0
+    assert srv.query("t").collect()[0]["estimate"] == 500
+
+
 def test_serialize_roundtrip_and_reset(spark):
     srv = SketchTableServer(spark, parse_config(REFERENCE_STYLE_CONFIG))
     srv.update("theta0", spark.range(100).select(F.col("id").alias("value")))
@@ -102,6 +160,16 @@ def test_serialize_roundtrip_and_reset(spark):
         srv.query("theta0")
     srv.load_image("theta0", img)
     assert srv.query("theta0").collect()[0]["estimate"] == 100
+
+
+def test_load_image_into_populated_theta_is_union(spark):
+    """A binary image loaded into a sketch that already holds data
+    merges with it: the estimate is that of the union."""
+    srv = SketchTableServer(spark, parse_config(REFERENCE_STYLE_CONFIG))
+    srv.update("theta0", spark.range(0, 600).select(F.col("id").alias("value")))
+    srv.update("theta1", spark.range(400, 1000).select(F.col("id").alias("value")))
+    srv.load_image("theta1", srv.serialize("theta0"))
+    assert srv.query("theta1").collect()[0]["estimate"] == 1000  # exact below 4096
 
 
 def test_serialize_all_seven_families(spark):
